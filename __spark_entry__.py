@@ -929,7 +929,7 @@ array_sort(
         # identical SQL oracle the DataFrame entry uses
         svc = _served_service(spark, sf_dir)
         rows = svc.collapse("table value", "source", k=10)
-        src = svc._docs_pdf(svc._index_dir, ["src_doc_id"])
+        src = svc._docs_pdf(["src_doc_id"])
         src_of = src.set_index("doc_id")["src_doc_id"]
         out = [
             (g, int(src_of[d]), round(s, 5), c) for g, d, s, c in rows
@@ -988,7 +988,7 @@ array_sort(
         # conv_id), so internal id 42 IS source doc 42
         svc = _served_service(spark, sf_dir)
         rows = svc.more_like_this(42, k=10, max_df_frac=1.0)
-        src = svc._docs_pdf(svc._index_dir, ["src_doc_id"])
+        src = svc._docs_pdf(["src_doc_id"])
         src_of = src.set_index("doc_id")["src_doc_id"]
         out = [(int(src_of[d]), round(s, 5)) for d, s in rows]
         return spark.createDataFrame(out, "doc_id long, score double")
@@ -1002,7 +1002,7 @@ array_sort(
         matched = svc.matched_docs("spark")
         # map internal ids → original doc_id from the docmap, order by the
         # original id (the fts_highlight contract), headline the first 10
-        src = svc._docs_pdf(svc.meta.index_dir, ["src_doc_id"])
+        src = svc._docs_pdf(["src_doc_id"])
         src_of = src.set_index("doc_id")["src_doc_id"]
         pairs = sorted((int(src_of[d]), int(d)) for d in matched)[:10]
         rows = [(orig, svc.headline(internal, ["spark"])) for orig, internal in pairs]
@@ -1018,7 +1018,7 @@ array_sort(
         # conjunctive ranking, k=15 offset=10, through SearchService.search
         svc = _served_service(spark, sf_dir)
         resp = svc.search("table value", k=15, offset=10)
-        src = svc._docs_pdf(svc.meta.index_dir, ["src_doc_id"])
+        src = svc._docs_pdf(["src_doc_id"])
         src_of = src.set_index("doc_id")["src_doc_id"]
         rows = [
             (int(src_of[d]), round(float(s), 5)) for d, s in resp.results
@@ -1041,7 +1041,7 @@ array_sort(
         svc = _served_service(spark, sf_dir)
         p1 = svc.search("table value", k=10)
         resp = svc.search("table value", k=15, search_after=p1.next_after)
-        src = svc._docs_pdf(svc.meta.index_dir, ["src_doc_id"])
+        src = svc._docs_pdf(["src_doc_id"])
         src_of = src.set_index("doc_id")["src_doc_id"]
         rows = [
             (int(src_of[d]), round(float(s), 5)) for d, s in resp.results

@@ -48,7 +48,7 @@ from discogsography_spark.codec import (
     pos_block_byte_offsets,
     varbyte_encode,
 )
-from discogsography_spark.index.docids import assign_doc_ids
+from discogsography_spark.index.docids import doc_ids_assigned
 from discogsography_spark.index.manifest import Manifest, SegmentRecord
 from discogsography_spark.params import (
     BLOCK_SIZE,
@@ -442,20 +442,20 @@ class IndexBuilder:
         n_null = n_dup = 0
         spark = transcripts.sparkSession
         if self.quarantine:
-            out = assign_doc_ids(
-                transcripts, with_tokens=True, analyzer=self.analyzer,
-                quarantine=True, keep_text=self.store_text,
-            )
             staged = os.path.join(self.index_dir, "docs_staged__tmp")
             if os.path.isdir(staged):
                 shutil.rmtree(staged)
-            (
-                out.withColumn("_q", F.col("doc_id") < 0)
-                .write.mode("overwrite")
-                .option("parquet.block.size", str(1024 * 1024))
-                .partitionBy("_q")
-                .parquet(staged)
-            )
+            with doc_ids_assigned(
+                transcripts, with_tokens=True, analyzer=self.analyzer,
+                quarantine=True, keep_text=self.store_text,
+            ) as out:
+                (
+                    out.withColumn("_q", F.col("doc_id") < 0)
+                    .write.mode("overwrite")
+                    .option("parquet.block.size", str(1024 * 1024))
+                    .partitionBy("_q")
+                    .parquet(staged)
+                )
             docs_part = os.path.join(staged, "_q=false")
             quar_part = os.path.join(staged, "_q=true")
             if os.path.isdir(self.docs_dir):
@@ -482,19 +482,19 @@ class IndexBuilder:
             sel = ["doc_id", "conv_id", "turn_idx", "dl", "tokens"] + (
                 ["text"] if self.store_text else []
             )
-            docs = assign_doc_ids(
+            tmp = self.docs_dir + "__tmp"
+            with doc_ids_assigned(
                 transcripts, with_tokens=True, analyzer=self.analyzer,
                 keep_text=self.store_text,
-            ).select(*sel)
-            tmp = self.docs_dir + "__tmp"
-            # small row groups: the docmap doubles as the doc store for
-            # point lookups (more-like-this source tokens); a 1 MB row
-            # group bounds the per-lookup decode at ~20 ms vs ~440 ms
-            # with the 128 MB default at 12M docs, while full-scan init
-            # reads are unaffected
-            docs.write.mode("overwrite").option(
-                "parquet.block.size", str(1024 * 1024)
-            ).parquet(tmp)
+            ) as docs:
+                # small row groups: the docmap doubles as the doc store for
+                # point lookups (more-like-this source tokens); a 1 MB row
+                # group bounds the per-lookup decode at ~20 ms vs ~440 ms
+                # with the 128 MB default at 12M docs, while full-scan init
+                # reads are unaffected
+                docs.select(*sel).write.mode("overwrite").option(
+                    "parquet.block.size", str(1024 * 1024)
+                ).parquet(tmp)
             if os.path.isdir(self.docs_dir):
                 shutil.rmtree(self.docs_dir)
             os.replace(tmp, self.docs_dir)

@@ -30,6 +30,7 @@ poisoning the dense rank — the reference's DLQ pattern
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from typing import Iterator
 
 import numpy as np
@@ -90,6 +91,39 @@ def assign_doc_ids(
     the same Arrow pass — one Python stage for the whole
     docID+analyze step instead of two.
     """
+    return _assign_doc_ids(
+        df, key_cols, num_partitions, with_tokens, analyzer, quarantine,
+        keep_text,
+    )[0]
+
+
+@contextmanager
+def doc_ids_assigned(df: DataFrame, **kwargs) -> Iterator[DataFrame]:
+    """assign_doc_ids(df, **kwargs) for the duration of a `with` block.
+
+    The range-sorted input is persisted because the count pass and the
+    id pass both read it; plain assign_doc_ids leaves it cached for the
+    rest of the session. Here it is unpersisted when the block exits, so
+    run every consumer of the result inside the block (a build writes the
+    docmap there and re-reads the parquet afterwards)."""
+    out, parted = _assign_doc_ids(df, **kwargs)
+    try:
+        yield out
+    finally:
+        parted.unpersist()
+
+
+def _assign_doc_ids(
+    df: DataFrame,
+    key_cols: tuple[str, str] = ("conv_id", "turn_idx"),
+    num_partitions: int | None = None,
+    with_tokens: bool = False,
+    analyzer: str = "simple",
+    quarantine: bool = False,
+    keep_text: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """assign_doc_ids' result and the persisted range-sorted frame it
+    reads from."""
     spark = df.sparkSession
     num_partitions = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
@@ -206,4 +240,4 @@ def assign_doc_ids(
         out = out.unionByName(
             null_row.select(*[c for c in out_cols if c != "_pid"])
         )
-    return out
+    return out, parted

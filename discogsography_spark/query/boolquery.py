@@ -455,6 +455,32 @@ def expand_prefix_nodes(ast: Node, expand: Callable[[str], list[str]]) -> Node |
     return parts[0] if len(parts) == 1 else ("or", tuple(parts))
 
 
+def expand_bool_prefixes(
+    ast: Node,
+    expand_pattern: Callable[[str, int], list[str]],
+    prefix_expansions: dict[str, list[str]] | None = None,
+) -> Node | None:
+    """Rewrite a parsed query's prefix/wild leaves to ORs of vocabulary
+    expansions — the one rewrite every evaluator (single index, live view,
+    served matched sets and highlights) applies before evaluation.
+
+    Expansions come from `expand_pattern(p, 64)` over the searcher's own
+    vocabulary, or from a caller-supplied `prefix_expansions` map (a
+    sharded coordinator injects its ONE global rewrite so every shard
+    evaluates the identical expansion). Prefix leaves store the bare
+    string and wild leaves the pattern — disjoint key spaces, so one
+    resolver serves both. Returns None when the query matches nothing."""
+    if not has_prefix_nodes(ast):
+        return ast
+    if prefix_expansions is not None:
+        out = expand_prefix_nodes(ast, lambda p: prefix_expansions.get(p, []))
+    else:
+        out = expand_prefix_nodes(ast, lambda p: expand_pattern(p, 64))
+    if out == ("true",):  # defensive: vacuous forms are parse-rejected
+        raise BoolQueryError("prefix expansion produced a match-all query")
+    return out
+
+
 def eval_docsets(ast: Node, docs_of, phrase_docs_of=None, within_docs_of=None):
     """Evaluate the predicate over sorted-unique docID arrays.
 

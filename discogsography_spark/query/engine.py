@@ -737,6 +737,20 @@ class LocalSearcher:
             self._readers[seg] = _SegmentReader(files) if files else None
         return self._readers[seg]
 
+    # corpus statistics under the names MergedSearcher and ShardedSearcher
+    # carry, so serving code reads one interface over every view
+    @property
+    def id_space(self) -> int:
+        return self.meta.id_space
+
+    @property
+    def n_docs(self) -> int:
+        return self.meta.n_docs
+
+    @property
+    def params(self) -> BM25Params:
+        return self.meta.params
+
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """term → document frequency (absent terms omitted) — the uniform
         coordinator stats RPC shared with MergedSearcher.term_dfs, so a
@@ -1764,29 +1778,6 @@ class LocalSearcher:
         res = self._topk_or(uniq, k) if mode == "or" else self._topk_and(uniq, k)
         return res, rewrites
 
-    def _expand_bool_prefixes(self, ast, prefix_expansions=None):
-        """Rewrite ('prefix', p) nodes to ORs of vocabulary expansions —
-        locally via expand_prefix, or from a caller-supplied map (the
-        sharded searcher injects GLOBAL expansions). None = no matches."""
-        from discogsography_spark.query.boolquery import (
-            BoolQueryError,
-            expand_prefix_nodes,
-            has_prefix_nodes,
-        )
-
-        if not has_prefix_nodes(ast):
-            return ast
-        if prefix_expansions is not None:
-            expand = lambda p: prefix_expansions.get(p, [])  # noqa: E731
-        else:
-            # prefix leaves store the bare string, wild leaves the
-            # pattern — disjoint, so one resolver serves both node kinds
-            expand = lambda p: self.expand_pattern(p, 64)  # noqa: E731
-        out = expand_prefix_nodes(ast, expand)
-        if out == ("true",):  # defensive: vacuous forms are parse-rejected
-            raise BoolQueryError("prefix expansion produced a match-all query")
-        return out
-
     def _phrase_doc_set(self, ordered: list[str]) -> np.ndarray:
         """All docs containing the ordered terms CONSECUTIVELY (sorted docID
         array) — the phrase-node resolver for boolean queries. Same key
@@ -2595,6 +2586,7 @@ class LocalSearcher:
         from discogsography_spark.query.boolquery import (
             all_terms,
             eval_docsets,
+            expand_bool_prefixes,
             parse_bool_query,
             polarity_terms,
         )
@@ -2610,7 +2602,7 @@ class LocalSearcher:
             )
         if ast is None:
             return []
-        ast = self._expand_bool_prefixes(ast, prefix_expansions)
+        ast = expand_bool_prefixes(ast, self.expand_pattern, prefix_expansions)
         if ast is None:
             return []
         # stat overrides come from a sharded caller whose constants differ
@@ -3089,6 +3081,7 @@ class DistributedQueryEngine:
         single aggregation, then the predicate as a native filter."""
         from discogsography_spark.query.boolquery import (
             all_terms,
+            expand_bool_prefixes,
             fold_predicate,
             parse_bool_query,
             polarity_terms,
@@ -3103,7 +3096,7 @@ class DistributedQueryEngine:
         empty = self._empty_result()
         if ast is None:
             return empty
-        ast = self._searcher._expand_bool_prefixes(ast)
+        ast = expand_bool_prefixes(ast, self._searcher.expand_pattern)
         if ast is None:
             return empty
         pos_terms, _neg = polarity_terms(ast)

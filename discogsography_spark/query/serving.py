@@ -25,6 +25,18 @@ Scale note: the facet code arrays cost a few bytes/doc/field on the serving
 node. Sharded serving (query/sharded.py) splits the docmap with the index,
 so per-shard facet arrays stay bounded; global facet counts are the SUM of
 per-shard counts (exact — counts are additive over disjoint shards).
+
+Three services share this shape. `SearchService` serves one static index
+and holds every response method. `MergedSearchService` is its live-view
+subclass — the same service over base + delta tail + a tombstone mask —
+and overrides only the view primitives: opening the MergedSearcher and
+`reopen()` (which reloads the view state), the docmap directory list
+(`_docmap_dirs`: base plus every delta), `matched_docs` /
+`matched_docs_synonym`, `_score_matched`, the significant-terms postings
+source (`_term_docs`), the tombstoned-id array (`_dead_ids`, empty for a
+static index), `grouped_topk` (full-depth evaluator ranking) and the top-k
+dispatch shared by `search` and `collapse` (`_search_topk`).
+`ShardedSearchService` is a coordinator over one of those per shard.
 """
 
 from __future__ import annotations
@@ -67,6 +79,9 @@ class SearchResponse:
 
 _NULL_FACET = "(none)"
 
+# the dead-id set of a static index (SearchService._dead_ids)
+_NO_DEAD = np.empty(0, dtype=np.int64)
+
 # docmap point-lookup row cache budget (the Lucene stored-fields-cache
 # analog): decoded (doc_id, tokens) row groups kept per service instance
 _DOCMAP_CACHE_BUDGET = 256 * 1024 * 1024
@@ -86,11 +101,7 @@ def _docmap_tokens_lookup(svc, docs_dir: str, doc_id: int) -> list[str]:
     same analyzer). A row with neither yields []."""
     import pyarrow.dataset as ds
 
-    dsets = getattr(svc, "_mlt_dsets", None)
-    if dsets is None:
-        dsets = svc._mlt_dsets = {}
-        svc._mlt_rg_cache = {}
-        svc._mlt_rg_bytes = 0
+    dsets = svc._mlt_dsets
     dset = dsets.get(docs_dir)
     if dset is None:
         dset = dsets[docs_dir] = ds.dataset(docs_dir, format="parquet")
@@ -553,6 +564,12 @@ class SearchService:
     facet_defs: facet name → either a docmap column name (string-valued) or
     a callable(pd.DataFrame of docmap columns) -> pd.Series of string labels
     (for derived facets like length buckets or decades).
+
+    Every view-independent method is written here, once. The live view
+    (MergedSearchService) subclasses this and overrides only the
+    primitives that differ between a static index and base + delta +
+    tombstones — see its docstring. Dense per-docID arrays are sized by
+    `n_docs`, the searcher's id space (for a static index, meta.n_docs).
     """
 
     def __init__(
@@ -561,11 +578,45 @@ class SearchService:
         facet_defs: dict[str, str | Callable[[pd.DataFrame], pd.Series]] | None = None,
         text_lookup: Callable[[int], str] | None = None,
     ):
-        self.searcher = LocalSearcher(index_dir)
-        self.meta = self.searcher.meta
+        self._open(index_dir)
         self._an = get_analyzer(self.meta.analyzer)
         self._index_dir = index_dir
         self._text_lookup = text_lookup
+        self._facet_defs = facet_defs
+        # docmap point-lookup row-group cache (_docmap_tokens_lookup);
+        # keyed by file path, so it stays valid across view reloads
+        self._mlt_dsets: dict[str, object] = {}
+        self._mlt_rg_cache: dict[tuple, tuple] = {}
+        self._mlt_rg_bytes = 0
+        self._load_view_state()
+
+    # ---- view primitives (overridden by the live view) -------------------
+    def _open(self, index_dir: str) -> None:
+        self.searcher = LocalSearcher(index_dir)
+        self.meta = self.searcher.meta
+
+    def reopen(self) -> bool:
+        """Advance to the latest committed view. A static index never
+        changes, so this is always a no-op returning False."""
+        return False
+
+    def _docmap_dirs(self) -> list[str]:
+        """Docmap directories of the served view, in docID order."""
+        return [os.path.join(self._index_dir, "docs")]
+
+    def _dead_ids(self) -> np.ndarray:
+        """Sorted docIDs that hold a slot but are not alive (none here)."""
+        return _NO_DEAD
+
+    # ---- view-derived docmap state ---------------------------------------
+    def _load_view_state(self) -> None:
+        """(Re)build every view-derived array: facet/text arrays size to
+        the id space and read every docmap of the view; the lazily-built
+        collapse/histogram/doc-value/context state starts empty."""
+        # every dense per-docID array sizes to the searcher's ID SPACE
+        # (tombstoned ids keep their slot until compact; dead ids never
+        # appear in matched sets, so they are never counted or shown)
+        self.n_docs = n = self.searcher.id_space
         self._texts: np.ndarray | None = None
         self._facet_codes: dict[str, np.ndarray] = {}
         self._facet_cats: dict[str, list[str]] = {}
@@ -573,55 +624,77 @@ class SearchService:
         self._hist_cache: dict[tuple[str, str], tuple[np.ndarray, list[str]]] = {}
         self._num_cols: dict[str, np.ndarray] = {}
         self._ctx_index = None
+        facet_defs = self._facet_defs
         if facet_defs:
-            self._load_facets(index_dir, facet_defs)
-        if text_lookup is None and bool(self.meta.stats.get("store_text")):
-            self._load_texts(index_dir)
-
-    # ---- init-time docmap loads ------------------------------------------
-    def _docs_pdf(self, index_dir: str, columns: list[str]) -> pd.DataFrame:
-        import pyarrow.dataset as ds
-
-        docs = ds.dataset(os.path.join(index_dir, "docs"), format="parquet")
-        want = [c for c in columns if c in docs.schema.names and c != "doc_id"]
-        missing = set(columns) - set(want) - {"doc_id"}
-        if missing:
-            raise ValueError(
-                f"docmap lacks columns {sorted(missing)} — facet fields must "
-                "be carried through the build (IndexBuilder keeps all input "
-                "columns on the quarantine path)"
+            cols = {s for s in facet_defs.values() if isinstance(s, str)}
+            derived = any(not isinstance(s, str) for s in facet_defs.values())
+            pdf = self._docs_pdf(None if derived else sorted(cols))
+            self._facet_codes, self._facet_cats = _facet_arrays(
+                pdf, facet_defs, n
             )
-        return docs.to_table(columns=["doc_id", *want]).to_pandas()
+        if self._text_lookup is None and bool(self.meta.stats.get("store_text")):
+            tp = self._docs_pdf(["text"])
+            arr = np.empty(n, dtype=object)
+            arr[tp["doc_id"].to_numpy()] = tp["text"].to_numpy(dtype=object)
+            self._texts = arr
 
-    def _load_facets(self, index_dir: str, facet_defs: dict) -> None:
-        cols: set[str] = set()
-        for spec in facet_defs.values():
-            if isinstance(spec, str):
-                cols.add(spec)
-        derived = {n: f for n, f in facet_defs.items() if not isinstance(f, str)}
-        pdf = self._docs_pdf(
-            index_dir,
-            sorted(cols) if not derived else
-            [c for c in self._all_docmap_columns(index_dir) if c not in ("tokens", "text")],
-        )
-        self._facet_codes, self._facet_cats = _facet_arrays(
-            pdf, facet_defs, self.meta.n_docs
-        )
-
-    def _all_docmap_columns(self, index_dir: str) -> list[str]:
+    def _docs_pdf(self, columns: list[str] | None) -> pd.DataFrame:
+        """Docmap rows over every docmap directory of the view (delta
+        docIDs are already globally offset). columns=None loads every
+        column except the token stream and the text."""
         import pyarrow.dataset as ds
 
-        return ds.dataset(
-            os.path.join(index_dir, "docs"), format="parquet"
-        ).schema.names
-
-    def _load_texts(self, index_dir: str) -> None:
-        pdf = self._docs_pdf(index_dir, ["text"])
-        arr = np.empty(self.meta.n_docs, dtype=object)
-        arr[pdf["doc_id"].to_numpy()] = pdf["text"].to_numpy(dtype=object)
-        self._texts = arr
+        frames = []
+        for d in self._docmap_dirs():
+            dset = ds.dataset(d, format="parquet")
+            avail = dset.schema.names
+            want = (
+                [c for c in avail if c not in ("doc_id", "tokens", "text")]
+                if columns is None
+                else [c for c in columns if c != "doc_id"]
+            )
+            missing = set(want) - set(avail)
+            if missing:
+                raise ValueError(
+                    f"docmap at {d} lacks columns {sorted(missing)} — facet "
+                    "fields must be carried through the build (IndexBuilder "
+                    "keeps all input columns on the quarantine path) and "
+                    "through every micro-batch (deltas written by an older "
+                    "DeltaIndexWriter carried only the key columns; compact() "
+                    "or re-stream them)"
+                )
+            frames.append(dset.to_table(columns=["doc_id", *want]).to_pandas())
+        if len(frames) == 1:
+            return frames[0]
+        return pd.concat(frames, ignore_index=True)
 
     # ---- per-query -------------------------------------------------------
+    def _bool_ast(
+        self,
+        query_text: str,
+        prefix_expansions: dict[str, list[str]] | None = None,
+        ast_override=None,
+    ):
+        """Parsed (or caller-supplied) boolean AST with its prefix/wild
+        leaves expanded; None when the query matches nothing."""
+        from discogsography_spark.query.boolquery import (
+            expand_bool_prefixes,
+            parse_bool_query,
+        )
+
+        ast = (
+            ast_override
+            if ast_override is not None
+            else parse_bool_query(
+                query_text, self._an.analyze_query, tokenize=self._an.tokenize_py
+            )
+        )
+        if ast is None:
+            return None
+        return expand_bool_prefixes(
+            ast, self.searcher.expand_pattern, prefix_expansions
+        )
+
     def matched_docs(
         self,
         query_text: str,
@@ -640,26 +713,17 @@ class SearchService:
         for bool mode (sharded fan-out); `ast_override` supplies an
         already-parsed (possibly fuzzy-rewritten) boolean AST."""
         s = self.searcher
+        empty = np.empty(0, dtype=np.int64)
         if mode == "bool":
             from discogsography_spark.query.boolquery import (
                 all_terms,
                 eval_docsets,
-                parse_bool_query,
             )
 
-            ast = (
-                ast_override
-                if ast_override is not None
-                else parse_bool_query(
-                    query_text, self._an.analyze_query, tokenize=self._an.tokenize_py
-                )
-            )
-            if ast is not None:
-                ast = s._expand_bool_prefixes(ast, prefix_expansions)
+            ast = self._bool_ast(query_text, prefix_expansions, ast_override)
             if ast is None:
-                return np.empty(0, dtype=np.int64)
+                return empty
             rows = s.lookup_terms(all_terms(ast))
-            empty = np.empty(0, dtype=np.int64)
             return eval_docsets(
                 ast,
                 lambda t: s._decoded(rows[t])[0] if t in rows else empty,
@@ -669,15 +733,15 @@ class SearchService:
         if terms is None:
             terms = self._an.analyze_query(query_text)
         if not terms:
-            return np.empty(0, dtype=np.int64)
+            return empty
         rows = s.lookup_terms(terms)
         if mode == "or":
             found = [s._decoded(rows[t])[0] for t in terms if t in rows]
             if not found:
-                return np.empty(0, dtype=np.int64)
+                return empty
             return np.unique(np.concatenate(found))
         if len(rows) != len(terms):
-            return np.empty(0, dtype=np.int64)
+            return empty
         by_df = sorted(terms, key=lambda t: (rows[t].df, t))
         cand = s._decoded(rows[by_df[0]])[0]
         for t in by_df[1:]:
@@ -723,8 +787,8 @@ class SearchService:
         column a Lucene stats aggregation reads."""
         arr = self._num_cols.get(name)
         if arr is None:
-            pdf = self._docs_pdf(self._index_dir, [name])
-            arr = np.full(self.meta.n_docs, np.nan, dtype=np.float64)
+            pdf = self._docs_pdf([name])
+            arr = np.full(self.n_docs, np.nan, dtype=np.float64)
             arr[pdf["doc_id"].to_numpy()] = pd.to_numeric(
                 pdf[name], errors="coerce"
             ).to_numpy(dtype=np.float64)
@@ -738,7 +802,6 @@ class SearchService:
         field → {count, min, max, sum, avg}, one O(|matched|) gather per
         field over the cached doc-value array — no corpus scan."""
         return {f: _stats_of(self._numeric_col(f)[matched]) for f in fields}
-
 
     def field_percentiles(
         self,
@@ -781,8 +844,7 @@ class SearchService:
         live view `matched` is already alive-only)."""
         if interval <= 0:
             raise ValueError(f"interval must be > 0, got {interval}")
-        v = self._numeric_col(field)[matched]
-        v = v[~np.isnan(v)]
+        v = self._field_values(matched, field)
         if v.size == 0:
             return []
         b = np.floor(v / interval).astype(np.int64)
@@ -798,8 +860,6 @@ class SearchService:
         tokenize loop was the dominant sf0.1 cost: ~0.12 ms × sample);
         falls back to the per-doc docmap stream otherwise."""
         if self._texts is not None and len(ids):
-            import pandas as pd
-
             arr = self._texts[np.asarray(ids, dtype=np.int64)]
             s = pd.Series(arr, dtype=object).map(
                 lambda t: "" if t is None else str(t)
@@ -811,6 +871,19 @@ class SearchService:
         return {
             t for d in ids for t in self._mlt_source_tokens(int(d))
         }
+
+    def _term_docs(
+        self, terms: list[str]
+    ) -> tuple[dict[str, int], Callable[[str], np.ndarray]]:
+        """(df per vocabulary term, term → sorted docID array): the
+        posting source of significant-terms fg counting. Doc arrays come
+        from the docs-only decode LRU, and only for the terms asked for."""
+        s = self.searcher
+        rows = s.lookup_terms(terms)
+        return (
+            {t: int(tp.df) for t, tp in rows.items()},
+            lambda t: s._decoded_docs(rows[t]),
+        )
 
     def _sig_fg_counts(
         self, matched: np.ndarray, sample: int | None, min_df: int = 1
@@ -826,27 +899,25 @@ class SearchService:
             else matched[:sample]
         )
         cand = self._candidate_terms(ids)
-        rows = self.searcher.lookup_terms(sorted(cand))
-        # membership-mask counting: one O(n_docs) mask build, then each
+        term_dfs, docs_of = self._term_docs(sorted(cand))
+        # membership-mask counting: one O(id_space) mask build, then each
         # candidate costs O(df) gather-sum — no per-candidate sort (the
         # intersect1d version re-sorted df+|matched| values per term,
         # p95 1.06 s at sf0.01; this path is ~20x cheaper). Terms whose
         # TOTAL df can't reach min_doc_count are never decoded at all.
-        mask = np.zeros(self.meta.n_docs, dtype=bool)
+        mask = np.zeros(self.n_docs, dtype=bool)
         mask[matched] = True
         fg: dict[str, int] = {}
         dfs: dict[str, int] = {}
-        for i, (t, tp) in enumerate(rows.items()):
+        for i, (t, df) in enumerate(term_dfs.items()):
             if i % 64 == 0:
                 self.searcher._budget_check()
-            if int(tp.df) < min_df:
+            if df < min_df:
                 continue
-            # docs-only decode: fg needs |posting ∩ matched|, never tf/dl
-            docs = self.searcher._decoded_docs(tp)
-            n = int(np.count_nonzero(mask[docs]))
+            n = int(np.count_nonzero(mask[docs_of(t)]))
             if n:
                 fg[t] = n
-                dfs[t] = int(tp.df)
+                dfs[t] = df
         return fg, dfs
 
     def significant_terms(
@@ -865,7 +936,9 @@ class SearchService:
         specialization) answer the same question with SQL GROUP BYs; here
         it rides the index: candidate discovery from ≤`sample` matched
         docs' stored text, exact fg = posting∩matched per candidate, bg =
-        the dictionary df. Returns [(term, fg_count, bg_count, score)]."""
+        the dictionary df. Returns [(term, fg_count, bg_count, score)].
+        On the live view every count is an alive count, so the result
+        equals a fresh alive-corpus rebuild's."""
         if budget_ms is not None:
             with self.searcher.deadline(budget_ms):
                 return self.significant_terms(
@@ -878,7 +951,7 @@ class SearchService:
         fg, dfs = self._sig_fg_counts(matched, sample, min_doc_count)
         exclude = set(self._an.analyze_query(query_text))
         return _jlh_rows(
-            fg, dfs, int(matched.size), self.meta.n_docs, exclude,
+            fg, dfs, int(matched.size), self.searcher.n_docs, exclude,
             min_doc_count, k,
         )
 
@@ -907,8 +980,8 @@ class SearchService:
         key = (field, interval)
         hit = self._hist_cache.get(key)
         if hit is None:
-            pdf = self._docs_pdf(self._index_dir, [field])
-            hit = _histogram_arrays(pdf, field, interval, self.meta.n_docs)
+            pdf = self._docs_pdf([field])
+            hit = _histogram_arrays(pdf, field, interval, self.n_docs)
             self._hist_cache[key] = hit
         return hit
 
@@ -953,15 +1026,13 @@ class SearchService:
         hit = self._collapse_cache.get(field)
         if hit is not None:
             return hit
-        pdf = self._docs_pdf(self._index_dir, [field])
-        codes, cats = _facet_arrays(pdf, {field: field}, self.meta.n_docs)
+        pdf = self._docs_pdf([field])
+        codes, cats = _facet_arrays(pdf, {field: field}, self.n_docs)
         self._collapse_cache[field] = (codes[field], cats[field])
         return self._collapse_cache[field]
 
     def _collapse_eval(self, query_text: str, mode: str):
-        if mode == "bool":
-            return lambda kp: self.searcher.topk_bool(query_text, kp)
-        return lambda kp: self.searcher.topk(query_text, kp, mode=mode)
+        return lambda kp: self._search_topk(query_text, kp, mode, None, None, None)
 
     def collapse(
         self,
@@ -1020,8 +1091,10 @@ class SearchService:
         codes, cats = self._collapse_codes(field)
         return _grouped_rows_arrays(matched, scores, codes, cats, k)
 
-
     def _mlt_source_tokens(self, doc_id: int) -> list[str]:
+        dead = self._dead_ids()
+        if dead.size and np.isin(doc_id, dead):
+            return []  # tombstoned source has no alive token stream
         # fast path: re-analyze the in-memory stored text (bit-identical to
         # the docmap token stream — the build tokenizes with the same
         # analyzer; ~µs vs ~25 ms for the columnar point lookup below)
@@ -1030,12 +1103,15 @@ class SearchService:
                 return []
             t = self._texts[doc_id]
             return self._an.tokenize_py("" if t is None else str(t))
-        return _docmap_tokens_lookup(
-            self, os.path.join(self._index_dir, "docs"), doc_id
-        )
+        for d in self._docmap_dirs():
+            got = _docmap_tokens_lookup(self, d, doc_id)
+            if got:
+                return got
+        return []
 
     def _mlt_stats(self, terms: list[str]):
-        return self.searcher.term_dfs(terms), self.meta.n_docs, self.meta.params
+        s = self.searcher
+        return s.term_dfs(terms), s.n_docs, s.params
 
     def _mlt_or_eval(self, terms: list[str]):
         return lambda kp: self.searcher._topk_or(terms, kp)
@@ -1060,12 +1136,19 @@ class SearchService:
     ) -> list[tuple]:
         """Conversation-context retrieval (query/context.py): every turn of
         the hit's conversation within `window` turn indexes, turn-ASC —
-        (doc_id, conv_id, turn_idx[, text]) rows, the hit included."""
+        (doc_id, conv_id, turn_idx[, text]) rows, the hit included. Dead
+        turns are dropped before the window is built, so on the live view
+        a deleted turn leaves a gap and an upserted turn's replacement
+        (which lives in a delta, far from its base siblings' docIDs) is
+        pulled in by TURN distance, never by docID adjacency."""
         if self._ctx_index is None:
             from discogsography_spark.query.context import ContextIndex
 
-            pdf = self._docs_pdf(self._index_dir, ["conv_id", "turn_idx"])
-            self._ctx_index = ContextIndex(pdf, self.meta.n_docs)
+            pdf = self._docs_pdf(["conv_id", "turn_idx"])
+            dead = self._dead_ids()
+            if dead.size:
+                pdf = pdf[~np.isin(pdf["doc_id"].to_numpy(), dead)]
+            self._ctx_index = ContextIndex(pdf, self.n_docs)
         rows = self._ctx_index.window(doc_id, window)
         if text:
             return [(d, c, t, self._text_of(d)) for d, c, t in rows]
@@ -1078,8 +1161,8 @@ class SearchService:
         if self._text_lookup is not None:
             return self._text_lookup(doc_id)
         raise ValueError(
-            "highlighting needs text: build with IndexBuilder(store_text=True) "
-            "or pass text_lookup to SearchService"
+            "highlighting needs text: build with IndexBuilder(store_text="
+            "True) (deltas inherit it) or pass text_lookup to the service"
         )
 
     def headline(
@@ -1114,6 +1197,28 @@ class SearchService:
             text = re.sub(f"({re.escape(t)})", r"<<\1>>", text)
         return text
 
+    def _search_topk(
+        self,
+        query_text: str,
+        k: int,
+        mode: str,
+        qterms: list[str] | None,
+        qast,
+        after: tuple[float, int] | None,
+    ) -> list[tuple[int, float]]:
+        """Unfiltered ranking of search() and collapse(): a did-you-mean
+        term list (`qterms`) or rewritten boolean AST (`qast`) goes
+        straight to its evaluator; otherwise the query text is ranked in
+        `mode`."""
+        s = self.searcher
+        if qterms is not None:
+            if mode == "or":
+                return s._topk_or(qterms, k, after=after)
+            return s._topk_and(qterms, k, after=after)
+        if qast is not None or mode == "bool":
+            return s.topk_bool(query_text, k, ast_override=qast, after=after)
+        return s.topk(query_text, k, mode=mode, after=after)
+
     def search(
         self,
         query_text: str,
@@ -1138,7 +1243,8 @@ class SearchService:
         (score DESC, doc_id ASC) tiebreak, so pages never overlap or skip.
         `budget_ms` caps the whole request's evaluation wall-clock
         (QueryBudgetExceeded at a block/term boundary — the reference's
-        120 s per-query cap, api/queries/rarity_queries.py:199-204)."""
+        120 s per-query cap, api/queries/rarity_queries.py:199-204); on
+        the live view it covers base, promoted legs and the delta tail."""
         if budget_ms is not None:
             with self.searcher.deadline(budget_ms):
                 return self.search(
@@ -1174,10 +1280,10 @@ class SearchService:
             # into a query string would re-stem suggested terms (Porter is
             # not idempotent), diverging from the reported rewrite.
             terms = self._an.analyze_query(query_text)
-            rows = self.searcher.lookup_terms(terms)
+            known = self.searcher.term_dfs(terms)
             fixed = []
             for t in terms:
-                if t in rows:
+                if t in known:
                     fixed.append(t)
                     continue
                 sugg = self.searcher.suggest_terms(t, k=1)
@@ -1210,7 +1316,7 @@ class SearchService:
 
                 qast, rewrites = rewrite_fuzzy_terms(
                     ast0,
-                    known=lambda t: bool(s.lookup_terms([t])),
+                    known=lambda t: bool(s.term_dfs([t])),
                     suggest=_sugg,
                 )
         if filter:
@@ -1228,28 +1334,9 @@ class SearchService:
             matched = self.matched_docs(
                 query_text, mode=mode, terms=qterms, ast_override=qast
             )
-            if qterms is not None:
-                results = (
-                    self.searcher._topk_or(qterms, k, after=search_after)
-                    if mode == "or"
-                    else self.searcher._topk_and(
-                        qterms, k, after=search_after
-                    )
-                )
-            elif qast is not None:
-                results = self.searcher.topk_bool(
-                    query_text, k, ast_override=qast, after=search_after
-                )
-            else:
-                results = (
-                    self.searcher.topk_bool(
-                        query_text, k, after=search_after
-                    )
-                    if mode == "bool"
-                    else self.searcher.topk(
-                        query_text, k, mode=mode, after=search_after
-                    )
-                )
+            results = self._search_topk(
+                query_text, k, mode, qterms, qast, search_after
+            )
         if offset:
             results = results[offset:]
         resp = SearchResponse(
@@ -1347,7 +1434,8 @@ class SearchService:
                 matched = matched.astype(np.int64, copy=False)
                 if filter:
                     matched = _facet_filter_keep(
-                        self._facet_codes, self._facet_cats, matched, filter
+                        self._facet_codes, self._facet_cats, matched, filter,
+                        svc=self,
                     )
                 results = self.searcher._topk_synonym_groups(
                     groups, k, after=search_after,
@@ -1415,6 +1503,25 @@ class SearchService:
         top = np.lexsort((matched, -scores))[:k]
         return [(int(matched[i]), float(scores[i])) for i in top]
 
+    def _scoring_terms(
+        self,
+        query_text: str,
+        mode: str,
+        terms: list[str] | None,
+        prefix_expansions: dict[str, list[str]] | None,
+        ast_override,
+    ) -> list[str]:
+        """Terms _score_matched sums over: the caller's override, else the
+        positive terms of the (prefix-expanded) predicate in bool mode, else
+        the analyzed query."""
+        if terms is not None:
+            return terms
+        if mode == "bool":
+            return self._highlight_terms(
+                query_text, mode, prefix_expansions, ast_override
+            )
+        return self._an.analyze_query(query_text)
+
     def _score_matched(
         self,
         query_text: str,
@@ -1435,15 +1542,9 @@ class SearchService:
         m, p = s.meta, s.meta.params
         if avgdl is None:
             avgdl = m.avgdl
-        if terms is None:
-            terms = (
-                # positive terms of the (prefix-expanded) predicate
-                self._highlight_terms(
-                    query_text, mode, prefix_expansions, ast_override
-                )
-                if mode == "bool"
-                else self._an.analyze_query(query_text)
-            )
+        terms = self._scoring_terms(
+            query_text, mode, terms, prefix_expansions, ast_override
+        )
         rows = s.lookup_terms(terms)
         scores = np.zeros(matched.size, dtype=np.float64)
         for t in sorted(set(terms)):  # fixed summation order
@@ -1496,20 +1597,9 @@ class SearchService:
             return self._an.analyze_query(query_text)
         # highlight only positive-polarity terms: a matching doc cannot
         # contain a term its predicate excludes
-        from discogsography_spark.query.boolquery import (
-            parse_bool_query,
-            polarity_terms,
-        )
+        from discogsography_spark.query.boolquery import polarity_terms
 
-        ast = (
-            ast_override
-            if ast_override is not None
-            else parse_bool_query(
-                query_text, self._an.analyze_query, tokenize=self._an.tokenize_py
-            )
-        )
-        if ast is not None:
-            ast = self.searcher._expand_bool_prefixes(ast, prefix_expansions)
+        ast = self._bool_ast(query_text, prefix_expansions, ast_override)
         return polarity_terms(ast)[0] if ast is not None else []
 
 
@@ -1557,8 +1647,7 @@ class ShardedSearchService:
         refresh. Returns True iff any shard changed."""
         changed = self.sharded.reopen()
         for svc in self.services:
-            if hasattr(svc, "reopen"):
-                changed = svc.reopen() or changed
+            changed = svc.reopen() or changed
         return bool(changed)
 
     def facet_tree(
@@ -2253,66 +2342,32 @@ class ShardedSearchService:
         )
 
 
-class MergedSearchService:
+class MergedSearchService(SearchService):
     """Full search response (results + facets + total_matched + headlines +
-    drill-down) over the LIVE merged base+delta view — a streaming
-    deployment serves the same shape as a compacted index, without pausing
-    between compactions. Facet code arrays factorize ONCE at init over the
-    base docmap plus every delta docmap (DeltaIndexWriter carries all batch
-    columns, and text when the base stores it); counts are plain bincounts
-    over the combined dense docID space, exactly like SearchService.
+    drill-down + aggregations) over the LIVE merged base+delta+tombstone
+    view — a streaming deployment serves the same shape as a compacted
+    index, without pausing between compactions.
 
-    After compact(), an instance opened fresh equals the single-index
-    SearchService response bit-for-bit (tested)."""
+    It is SearchService with a tombstone mask: every response method is
+    the base class's. This class overrides only the view primitives —
+    opening the MergedSearcher and `reopen()` (reloads the view state),
+    `_docmap_dirs` (base plus every delta docmap), `matched_docs` /
+    `matched_docs_synonym` and `_score_matched` (alive merged relations),
+    `_term_docs` (significant-terms postings), `_dead_ids` (tombstones),
+    `grouped_topk` (full-depth evaluator ranking) and `_search_topk` (OR
+    ranks through the boolean evaluator).
 
-    def __init__(
-        self,
-        index_dir: str,
-        facet_defs: dict[str, str | Callable[[pd.DataFrame], pd.Series]] | None = None,
-        text_lookup: Callable[[int], str] | None = None,
-    ):
+    `n_docs` is the id space, dead slots included. After compact(), an
+    instance opened fresh equals the single-index SearchService response
+    bit-for-bit (tested)."""
+
+    def _open(self, index_dir: str) -> None:
         from discogsography_spark.streaming.incremental import MergedSearcher
 
         self.searcher = MergedSearcher(index_dir)
-        base_meta = self.searcher.base.meta
-        self._an = get_analyzer(base_meta.analyzer)
-        # facet/text arrays are indexed by docID, so they size to the full
-        # ID SPACE (tombstoned ids keep their slot until compact); dead ids
-        # never appear in matched sets, so they are never counted or shown
-        self.n_docs = self.searcher.id_space
-        self._text_lookup = text_lookup
-        self._facet_defs = facet_defs
-        self._load_view_state()
-
-    def _load_view_state(self) -> None:
-        """(Re)build every view-derived array — facet/text arrays size to
-        the current id_space and read base + delta docmaps, so they rebuild
-        wholesale whenever reopen() advances the delta snapshot."""
-        base_meta = self.searcher.base.meta
-        facet_defs = self._facet_defs
-        text_lookup = self._text_lookup
-        self.n_docs = self.searcher.id_space
-        self._texts: np.ndarray | None = None
-        self._facet_codes: dict[str, np.ndarray] = {}
-        self._facet_cats: dict[str, list[str]] = {}
-        self._collapse_cache: dict[str, tuple[np.ndarray, list[str]]] = {}
-        self._hist_cache: dict[tuple[str, str], tuple[np.ndarray, list[str]]] = {}
-        self._num_cols: dict[str, np.ndarray] = {}
-        self._ctx_index = None
-        if facet_defs:
-            cols: set[str] = {
-                s for s in facet_defs.values() if isinstance(s, str)
-            }
-            derived = any(not isinstance(s, str) for s in facet_defs.values())
-            pdf = self._docs_pdf(sorted(cols) if not derived else None)
-            self._facet_codes, self._facet_cats = _facet_arrays(
-                pdf, facet_defs, self.n_docs
-            )
-        if text_lookup is None and bool(base_meta.stats.get("store_text")):
-            tp = self._docs_pdf(["text"])
-            arr = np.empty(self.n_docs, dtype=object)
-            arr[tp["doc_id"].to_numpy()] = tp["text"].to_numpy(dtype=object)
-            self._texts = arr
+        # the BASE index's meta (analyzer, store_text flag); corpus
+        # statistics are the searcher's alive counts
+        self.meta = self.searcher.base.meta
 
     def reopen(self) -> bool:
         """Advance the underlying live view to the latest committed
@@ -2323,90 +2378,44 @@ class MergedSearchService:
         Returns True iff anything changed; False is a pure no-op."""
         if not self.searcher.reopen():
             return False
+        self.meta = self.searcher.base.meta
         self._load_view_state()
         return True
 
-    def _docs_pdf(self, columns: list[str] | None) -> pd.DataFrame:
-        """Concatenated docmap rows over base + deltas (delta docIDs are
-        already globally offset). columns=None loads every shared column
-        except the token stream."""
-        import pyarrow.dataset as ds
-
-        from discogsography_spark.streaming.incremental import list_deltas
-
-        dirs = [os.path.join(self.searcher.index_dir, "docs")] + [
+    def _docmap_dirs(self) -> list[str]:
+        return super()._docmap_dirs() + [
             os.path.join(d, "docs")
-            for d in list_deltas(self.searcher.index_dir)
+            for d in self.searcher._delta_dirs
             if os.path.isdir(os.path.join(d, "docs"))
         ]
-        frames = []
-        for i, d in enumerate(dirs):
-            dset = ds.dataset(d, format="parquet")
-            avail = set(dset.schema.names)
-            want = (
-                [c for c in avail if c not in ("tokens", "text")]
-                if columns is None
-                else columns
-            )
-            missing = set(want) - avail
-            if missing:
-                raise ValueError(
-                    f"docmap at {d} lacks columns {sorted(missing)} — facet "
-                    "fields must be present in every micro-batch (deltas "
-                    "written by an older DeltaIndexWriter carried only the "
-                    "key columns; compact() or re-stream them)"
-                )
-            frames.append(
-                dset.to_table(
-                    columns=sorted({"doc_id", *want})
-                ).to_pandas()
-            )
-        return pd.concat(frames, ignore_index=True)
 
-    # ---- per-query ------------------------------------------------------
+    def _dead_ids(self) -> np.ndarray:
+        return self.searcher._dead
+
     def matched_docs(
         self,
         query_text: str,
         mode: str = "and",
         terms: list[str] | None = None,
-        ast_override=None,
         prefix_expansions: dict[str, list[str]] | None = None,
+        ast_override=None,
     ) -> np.ndarray:
+        """Alive matched set from the merged (tombstone-masked) relations —
+        the SearchService.matched_docs contract on the live view."""
+        from discogsography_spark.query.engine import isect_sorted
+
         s = self.searcher
+        empty = np.empty(0, dtype=np.int64)
         if mode == "bool":
             from discogsography_spark.query.boolquery import (
-                BoolQueryError,
                 all_terms,
                 eval_docsets,
-                expand_prefix_nodes,
-                has_prefix_nodes,
-                parse_bool_query,
             )
 
-            ast = (
-                ast_override
-                if ast_override is not None
-                else parse_bool_query(
-                    query_text, self._an.analyze_query, tokenize=self._an.tokenize_py
-                )
-            )
-            if ast is not None and has_prefix_nodes(ast):
-                if prefix_expansions is not None:
-                    ast = expand_prefix_nodes(
-                        ast, lambda p: prefix_expansions.get(p, [])
-                    )
-                else:
-                    ast = expand_prefix_nodes(
-                        ast, lambda p: s.expand_pattern(p, 64)
-                    )
-                if ast == ("true",):
-                    raise BoolQueryError(
-                        "prefix expansion produced a match-all query"
-                    )
+            ast = self._bool_ast(query_text, prefix_expansions, ast_override)
             if ast is None:
-                return np.empty(0, dtype=np.int64)
+                return empty
             merged = s._merged_rows(all_terms(ast))
-            empty = np.empty(0, dtype=np.int64)
             return eval_docsets(
                 ast,
                 lambda t: merged[t][0] if merged.get(t) is not None else empty,
@@ -2415,23 +2424,18 @@ class MergedSearchService:
             )
         if terms is None:
             terms = self._an.analyze_query(query_text)
-        if not terms:
-            return np.empty(0, dtype=np.int64)
-        merged = s._merged_rows(sorted(set(terms)))
-        arrs = [merged[t][0] for t in sorted(set(terms)) if merged[t] is not None]
+        uniq = sorted(set(terms))
+        if not uniq:
+            return empty
+        merged = s._merged_rows(uniq)
+        arrs = [merged[t][0] for t in uniq if merged[t] is not None]
         if mode == "or":
-            if not arrs:
-                return np.empty(0, dtype=np.int64)
-            return np.unique(np.concatenate(arrs))
-        if len(arrs) != len(set(terms)):
-            return np.empty(0, dtype=np.int64)
+            return np.unique(np.concatenate(arrs)) if arrs else empty
+        if len(arrs) != len(uniq):
+            return empty
         cand = arrs[0]
         for d in sorted(arrs[1:], key=lambda a: a.size):
-            pos = np.searchsorted(d, cand)
-            ok = pos < d.size
-            hit = np.zeros(cand.shape, dtype=bool)
-            hit[ok] = d[pos[ok]] == cand[ok]
-            cand = cand[hit]
+            cand = isect_sorted(cand, d)
             if cand.size == 0:
                 break
         return cand
@@ -2450,386 +2454,61 @@ class MergedSearchService:
             lambda t: rels[t][0] if rels.get(t) is not None else None,
         )
 
-    def _search_synonym(
+    def _term_docs(
+        self, terms: list[str]
+    ) -> tuple[dict[str, int], Callable[[str], np.ndarray]]:
+        # alive merged relations: df is the ALIVE df
+        rels = self.searcher._merged_rows(terms)
+        return (
+            {t: int(e[0].size) for t, e in rels.items() if e is not None},
+            lambda t: rels[t][0],
+        )
+
+    def _score_matched(
         self,
         query_text: str,
-        k: int,
-        synonyms: dict[str, list[str]],
-        facets: list[str] | None,
-        highlight: bool,
-        fuzzy: bool,
-        filter: dict[str, str] | None,
         mode: str,
-        highlight_fragments: int | None,
-        fragment_mode: str,
-        offset: int,
-        search_after: tuple[float, int] | None,
-        stats_fields: list[str] | None = None,
-    ) -> SearchResponse:
-        """Synonym-aware served response over the live view — same shape
-        as SearchService._search_synonym, alive semantics throughout
-        (group stats, matched set, facets, headlines)."""
-        if mode != "and":
-            raise ValueError(
-                "synonyms compose with mode='and' (SynonymQuery is "
-                f"conjunctive across groups), got mode={mode!r}"
-            )
-        if fuzzy:
-            raise ValueError("fuzzy and synonyms are mutually exclusive")
-        from discogsography_spark.query.engine import isect_sorted
-
-        groups = _synonym_groups(self._an, query_text, synonyms)
-        # ONE relations build feeds the matched set AND the ranking —
-        # the matched-then-rank shape used to decode and merge the same
-        # group postings twice per request
-        relations = self.searcher._synonym_group_relations(groups)
-        if relations is None:
-            matched = np.empty(0, dtype=np.int64)
-            results: list[tuple[int, float]] = []
-        else:
-            by_size = sorted((g[1] for g in relations), key=lambda d: d.size)
-            matched = by_size[0]
-            for d in by_size[1:]:
-                matched = isect_sorted(matched, d)
-            matched = matched.astype(np.int64, copy=False)
-            if filter:
-                matched = _facet_filter_keep(
-                    self._facet_codes, self._facet_cats, matched, filter,
-                    svc=self,
-                )
-            results = self.searcher._topk_synonym_groups(
-                groups, k, after=search_after,
-                relations=relations, cand=matched,
-            )
-        if offset:
-            results = results[offset:]
-        resp = SearchResponse(
-            results=results, total_matched=int(matched.size), rewrites={}
-        )
-        if results:
-            resp.next_after = (results[-1][1], results[-1][0])
-        if facets is None and self._facet_codes:
-            facets = sorted(self._facet_codes)
-        if facets:
-            resp.facets = self.facet_counts(matched, facets)
-        if stats_fields:
-            resp.stats = self.field_stats(matched, stats_fields)
-        if highlight:
-            hterms = sorted({x for _, ms in groups for x in ms})
-            resp.headlines = {
-                d: self.headline(
-                    d, hterms, max_fragments=highlight_fragments,
-                    fragment_mode=fragment_mode,
-                )
-                for d, _ in results
-            }
-        return resp
-
-    def facet_counts(
-        self, matched: np.ndarray, facet_names: list[str] | None = None
-    ) -> dict[str, list[tuple[str, int]]]:
-        out: dict[str, list[tuple[str, int]]] = {}
-        for name in facet_names or sorted(self._facet_codes):
-            codes = self._facet_codes[name]
-            cats = self._facet_cats[name]
-            counts = np.bincount(codes[matched], minlength=len(cats))
-            out[name] = [
-                (cats[i], int(counts[i]))
-                for i in range(len(cats))
-                if counts[i] > 0
-            ]
-        return out
-
-    def _numeric_col(self, name: str) -> np.ndarray:
-        """Dense doc-value array over base + delta docmaps (id-space
-        sized; tombstoned slots never appear in matched sets)."""
-        arr = self._num_cols.get(name)
-        if arr is None:
-            pdf = self._docs_pdf([name])
-            arr = np.full(self.n_docs, np.nan, dtype=np.float64)
-            arr[pdf["doc_id"].to_numpy()] = pd.to_numeric(
-                pdf[name], errors="coerce"
-            ).to_numpy(dtype=np.float64)
-            self._num_cols[name] = arr
-        return arr
-
-    def field_stats(
-        self, matched: np.ndarray, fields: list[str]
-    ) -> dict[str, dict[str, float | int | None]]:
-        """Stats metric aggregation over the ALIVE matched set of the
-        live view — same contract as SearchService.field_stats."""
-        return {f: _stats_of(self._numeric_col(f)[matched]) for f in fields}
-
-
-    def field_percentiles(
-        self,
         matched: np.ndarray,
-        field: str,
-        percents: tuple[float, ...] = (25.0, 50.0, 75.0, 95.0),
-    ) -> dict[float, float]:
-        """EXACT percentiles (linear interpolation — np.percentile /
-        SQL quantile_cont semantics) of a numeric field over the MATCHED
-        set; {} when no non-null values. The reference computes exact
-        percentiles in SQL for its rarity distribution endpoints; ES
-        `percentiles` is approximate t-digest — here exactness is cheap
-        because the doc-value gather is O(|matched|)."""
-        v = self._field_values(matched, field)
-        if v.size == 0:
-            return {}
-        return {
-            float(q): float(np.percentile(v, q)) for q in percents
-        }
-
-    def field_cardinality(self, matched: np.ndarray, field: str) -> int:
-        """EXACT distinct non-null value count of a numeric docmap field
-        over the MATCHED set (ES `cardinality` is HLL-approximate; the
-        sharded coordinator unions per-shard distinct-value arrays, so
-        the sharded number is exact too)."""
-        return int(np.unique(self._field_values(matched, field)).size)
-
-    def _field_values(self, matched: np.ndarray, field: str) -> np.ndarray:
-        v = self._numeric_col(field)[matched]
-        return v[~np.isnan(v)]
-
-    def numeric_histogram(
-        self, matched: np.ndarray, field: str, interval: float
-    ) -> list[tuple[float, int]]:
-        """Numeric histogram aggregation over the MATCHED set
-        (Elasticsearch `histogram`): bucket = floor(value/interval) ·
-        interval, (bucket, count) bucket-ASC, empty buckets dropped,
-        nulls excluded — one O(|matched|) gather over the cached
-        doc-value array (the date_histogram contract for numbers; on the
-        live view `matched` is already alive-only)."""
-        if interval <= 0:
-            raise ValueError(f"interval must be > 0, got {interval}")
-        v = self._numeric_col(field)[matched]
-        v = v[~np.isnan(v)]
-        if v.size == 0:
-            return []
-        b = np.floor(v / interval).astype(np.int64)
-        uniq, counts = np.unique(b, return_counts=True)
-        return [
-            (float(u * interval), int(c)) for u, c in zip(uniq, counts)
-        ]
-
-    def _candidate_terms(self, ids: np.ndarray) -> set[str]:
-        """Vectorized significant-terms candidate discovery over the live
-        view — same contract as SearchService._candidate_terms (one pandas
-        tokenize pass over stored text, per-doc stream fallback); also the
-        shape the sharded fan-out calls on live shards."""
-        if self._texts is not None and len(ids):
-            import pandas as pd
-
-            arr = self._texts[np.asarray(ids, dtype=np.int64)]
-            s = pd.Series(arr, dtype=object).map(
-                lambda t: "" if t is None else str(t)
-            )
-            cand: set[str] = set()
-            for ts in self._an.tokenize_pandas(s):
-                cand.update(ts)
-            return cand
-        return {
-            t for d in ids for t in self._mlt_source_tokens(int(d))
-        }
-
-    def _sig_fg_counts(
-        self, matched: np.ndarray, sample: int | None, min_df: int = 1
-    ) -> tuple[dict[str, int], dict[str, int]]:
-        """Foreground/background dfs over ALIVE merged relations — same
-        sampled-discovery / exact-statistics split as SearchService."""
-        ids = (
-            matched
-            if sample is None or matched.size <= sample
-            else matched[:sample]
-        )
-        cand = self._candidate_terms(ids)
-        rels = self.searcher._merged_rows(sorted(cand))
-        mask = np.zeros(self.searcher.id_space, dtype=bool)
-        mask[matched] = True
-        fg: dict[str, int] = {}
-        dfs: dict[str, int] = {}
-        for i, (t, ent) in enumerate(rels.items()):
-            if i % 64 == 0:
-                self.searcher._budget_check()
-            if ent is None or ent[0].size < min_df:
-                continue
-            docs = ent[0]
-            n = int(np.count_nonzero(mask[docs]))
-            if n:
-                fg[t] = n
-                dfs[t] = int(docs.size)
-        return fg, dfs
-
-    def significant_terms(
-        self,
-        query_text: str,
-        k: int = 10,
-        mode: str = "and",
-        sample: int | None = 1000,
-        min_doc_count: int = 3,
-        budget_ms: float | None = None,
-    ) -> list[tuple[str, int, int, float]]:
-        """Significant-terms (JLH) over the ALIVE live view — tombstoned
-        docs never match, never count as foreground, and the background
-        dfs are alive dfs, so the result equals a fresh alive-corpus
-        rebuild's significant_terms."""
-        if budget_ms is not None:
-            with self.searcher.deadline(budget_ms):
-                return self.significant_terms(
-                    query_text, k=k, mode=mode, sample=sample,
-                    min_doc_count=min_doc_count,
-                )
-        matched = self.matched_docs(query_text, mode=mode)
-        if matched.size == 0:
-            return []
-        fg, dfs = self._sig_fg_counts(matched, sample, min_doc_count)
-        exclude = set(self._an.analyze_query(query_text))
-        return _jlh_rows(
-            fg, dfs, int(matched.size), self.searcher.n_docs, exclude,
-            min_doc_count, k,
-        )
-
-    def date_histogram(
-        self, matched: np.ndarray, field: str = "ts", interval: str = "month"
-    ) -> list[tuple[str, int]]:
-        """Date histogram over the ALIVE matched set of the live view —
-        period codes factorize once over base + delta docmaps (sized to
-        the id space; tombstoned slots never appear in matched sets, so
-        dead docs never count). Same contract as SearchService."""
-        codes, cats = self._hist_codes(field, interval)
-        counts = np.bincount(codes[matched], minlength=len(cats))
-        return [
-            (cats[i], int(counts[i]))
-            for i in range(len(cats))
-            if counts[i] > 0
-        ]
-
-    def _hist_codes(
-        self, field: str, interval: str
-    ) -> tuple[np.ndarray, list[str]]:
-        key = (field, interval)
-        hit = self._hist_cache.get(key)
-        if hit is None:
-            pdf = self._docs_pdf([field])
-            hit = _histogram_arrays(pdf, field, interval, self.n_docs)
-            self._hist_cache[key] = hit
-        return hit
-
-    def _highlight_terms(
-        self,
-        query_text: str,
-        mode: str,
-        ast_override=None,
+        idfs: dict[str, float] | None = None,
+        avgdl: float | None = None,
+        terms: list[str] | None = None,
         prefix_expansions: dict[str, list[str]] | None = None,
-    ) -> list[str]:
-        if mode != "bool":
-            return self._an.analyze_query(query_text)
-        from discogsography_spark.query.boolquery import (
-            expand_prefix_nodes,
-            has_prefix_nodes,
-            parse_bool_query,
-            polarity_terms,
-        )
-
-        ast = (
-            ast_override
-            if ast_override is not None
-            else parse_bool_query(
-                query_text, self._an.analyze_query, tokenize=self._an.tokenize_py
+        ast_override=None,
+    ) -> np.ndarray:
+        """Exact BM25 over the alive merged relations with combined
+        base+delta stats (or a live sharded coordinator's injected GLOBAL
+        ones), sorted-term accumulation — SearchService._score_matched on
+        the live view."""
+        s = self.searcher
+        p = s.params
+        if avgdl is None:
+            avgdl = s.avgdl
+        uniq = sorted(set(self._scoring_terms(
+            query_text, mode, terms, prefix_expansions, ast_override
+        )))
+        merged = s._merged_rows(uniq)
+        scores = np.zeros(matched.size, dtype=np.float64)
+        for t in uniq:  # fixed summation order
+            ent = merged.get(t)
+            if ent is None:
+                continue
+            d, tf, dl = ent
+            pos = np.searchsorted(d, matched)
+            ok = pos < d.size
+            mask = np.zeros(matched.size, dtype=bool)
+            mask[ok] = d[pos[ok]] == matched[ok]
+            sel = pos[mask]
+            idf = (
+                idfs[t]
+                if idfs is not None and t in idfs
+                else p.idf(s.n_docs, int(d.size))
             )
-        )
-        if ast is not None and has_prefix_nodes(ast):
-            # a live sharded coordinator injects its ONE global rewrite
-            if prefix_expansions is not None:
-                ast = expand_prefix_nodes(
-                    ast, lambda p: prefix_expansions.get(p, [])
-                )
-            else:
-                ast = expand_prefix_nodes(
-                    ast, lambda p: self.searcher.expand_pattern(p, 64)
-                )
-        return polarity_terms(ast)[0] if ast is not None else []
-
-    def facet_tree_pairs(
-        self, matched: np.ndarray, parent: str, child: str
-    ) -> list[tuple[str, str, int]]:
-        """(parent, child, n) co-occurrence counts over the matched set —
-        ONE combined bincount over the two dense code arrays (parent code
-        × |child categories| + child code), zero pairs dropped. This is
-        the per-shard RPC vector of the hierarchical facet tree: shards
-        are doc-disjoint, so the coordinator just adds vectors."""
-        pcodes, pcats = self._collapse_codes(parent)
-        ccodes, ccats = self._collapse_codes(child)
-        C = len(ccats)
-        if matched.size == 0 or C == 0:
-            return []
-        combo = pcodes[matched].astype(np.int64) * C + ccodes[matched]
-        counts = np.bincount(combo, minlength=len(pcats) * C)
-        nz = np.flatnonzero(counts)
-        return [
-            (pcats[int(i // C)], ccats[int(i % C)], int(counts[i]))
-            for i in nz
-        ]
-
-    def facet_tree(
-        self, matched: np.ndarray, parent: str, child: str
-    ) -> list[dict]:
-        """Two-level nested facet hierarchy over the matched set — the
-        reference's genre→style tree (genre_tree_queries.py:13-31) from
-        the serving path: O(|matched|) + one bincount, no corpus scan."""
-        return assemble_facet_tree(
-            self.facet_tree_pairs(matched, parent, child)
-        )
-
-    def _collapse_codes(self, field: str) -> tuple[np.ndarray, list[str]]:
-        """Dense per-docID group codes + labels for a docmap column —
-        reuses a registered facet's arrays, else loads and caches the
-        column once (the facet-array factorization, so a high-cardinality
-        collapse key like conv_id costs one int32 array + label list)."""
-        if field in self._facet_codes:
-            return self._facet_codes[field], self._facet_cats[field]
-        hit = self._collapse_cache.get(field)
-        if hit is not None:
-            return hit
-        pdf = self._docs_pdf([field])
-        codes, cats = _facet_arrays(pdf, {field: field}, self.n_docs)
-        self._collapse_cache[field] = (codes[field], cats[field])
-        return self._collapse_cache[field]
-
-    def _collapse_eval(self, query_text: str, mode: str):
-        if mode == "bool":
-            return lambda kp: self.searcher.topk_bool(query_text, kp)
-        if mode == "or":
-            # merged OR rides the bool evaluator on a flat OR node (the
-            # same dispatch as MergedSearchService.search)
-            terms = sorted(set(self._an.analyze_query(query_text)))
-            node = ("or", tuple(("term", t) for t in terms)) if terms else None
-            return lambda kp: (
-                self.searcher.topk_bool(query_text, kp, ast_override=node)
-                if node is not None
-                else []
+            tfv = tf[sel].astype(np.float64)
+            norm = p.k1 * (
+                1.0 - p.b + p.b * (dl[sel].astype(np.float64) / avgdl)
             )
-        return lambda kp: self.searcher.topk(query_text, kp)
-
-    def collapse(
-        self,
-        query_text: str,
-        field: str,
-        k: int,
-        mode: str = "and",
-        counts: bool = True,
-        probe_k: int | None = None,
-    ) -> list[tuple]:
-        """Field-collapsed search over the live merged view — identical
-        contract to SearchService.collapse, evaluated on the ALIVE corpus
-        (upserts collapse to their latest version, deleted turns never
-        represent or count toward a group). Group codes load over the
-        base+delta docmap; tombstoned slots are never read."""
-        from discogsography_spark.query.collapse import service_collapse
-
-        return service_collapse(
-            self, query_text, field, k, mode=mode, counts=counts, probe_k=probe_k
-        )
+            scores[mask] = scores[mask] + idf * (tfv / (tfv + norm))
+        return scores
 
     def grouped_topk(
         self,
@@ -2850,357 +2529,32 @@ class MergedSearchService:
         codes, cats = self._collapse_codes(field)
         return _grouped_rows(hits, codes, cats, k)
 
-
-    def _mlt_source_tokens(self, doc_id: int) -> list[str]:
-        from discogsography_spark.streaming.incremental import list_deltas
-
-        s = self.searcher
-        dead = s._dead
-        if dead.size:
-            pos = int(np.searchsorted(dead, doc_id))
-            if pos < dead.size and int(dead[pos]) == doc_id:
-                return []  # tombstoned source has no alive token stream
-        if self._texts is not None:
-            if not (0 <= doc_id < self._texts.size):
-                return []
-            t = self._texts[doc_id]
-            return self._an.tokenize_py("" if t is None else str(t))
-        dirs = [os.path.join(s.index_dir, "docs")] + [
-            os.path.join(d, "docs")
-            for d in list_deltas(s.index_dir)
-            if os.path.isdir(os.path.join(d, "docs"))
-        ]
-        for d in dirs:
-            got = _docmap_tokens_lookup(self, d, doc_id)
-            if got:
-                return got
-        return []
-
-    def _mlt_stats(self, terms: list[str]):
-        s = self.searcher
-        return s.term_dfs(terms), s.n_docs, s.params
-
-    def _mlt_or_eval(self, terms: list[str]):
-        return lambda kp: self.searcher._topk_or(terms, kp)
-
-    def more_like_this(
-        self, doc_id: int, k: int, max_terms: int = 8, min_df: int = 2,
-        max_df_frac: float = 0.25,
-    ) -> list[tuple[int, float]]:
-        """More-like-this over the ALIVE live view: term selection uses
-        alive df/n_docs, and neither a tombstoned source version nor any
-        deleted turn can appear in the neighbors."""
-        from discogsography_spark.query.mlt import service_more_like_this
-
-        return service_more_like_this(
-            self, doc_id, k, max_terms=max_terms, min_df=min_df,
-            max_df_frac=max_df_frac,
-        )
-
-    def context(
-        self, doc_id: int, window: int = 2, text: bool = False
-    ) -> list[tuple]:
-        """Conversation context over the ALIVE live view: tombstoned turns
-        are dropped before the window is built, so a deleted or upserted-
-        away turn leaves a visible gap and the replacement version (which
-        lives in a delta, far from its base siblings' docIDs) is pulled in
-        by TURN distance, never by docID adjacency."""
-        if self._ctx_index is None:
-            from discogsography_spark.query.context import ContextIndex
-
-            pdf = self._docs_pdf(["conv_id", "turn_idx"])
-            dead = self.searcher._dead
-            if dead.size:
-                ids = pdf["doc_id"].to_numpy()
-                pos = np.searchsorted(dead, ids)
-                ok = pos < dead.size
-                is_dead = np.zeros(ids.size, dtype=bool)
-                is_dead[ok] = dead[pos[ok]] == ids[ok]
-                pdf = pdf[~is_dead]
-            self._ctx_index = ContextIndex(pdf, self.n_docs)
-        rows = self._ctx_index.window(doc_id, window)
-        if text:
-            return [(d, c, t, self._text_of(d)) for d, c, t in rows]
-        return rows
-
-    def _text_of(self, doc_id: int) -> str:
-        if self._texts is not None:
-            t = self._texts[doc_id]
-            return "" if t is None else str(t)
-        if self._text_lookup is not None:
-            return self._text_lookup(doc_id)
-        raise ValueError(
-            "highlighting needs text: build with IndexBuilder(store_text="
-            "True) (deltas inherit it) or pass text_lookup"
-        )
-
-    def headline(
-        self,
-        doc_id: int,
-        terms: list[str],
-        max_fragments: int | None = None,
-        radius: int = 30,
-        fragment_mode: str = "term",
-        max_words: int = 12,
-    ) -> str:
-        text = self._text_of(doc_id)
-        if max_fragments is not None:
-            if fragment_mode == "cover":
-                return cover_fragments(
-                    text, terms, max_fragments=max_fragments, max_words=max_words
-                )
-            return fragment_headline(
-                text, terms, max_fragments=max_fragments, radius=radius
-            )
-        for t in sorted(set(terms)):
-            text = re.sub(f"({re.escape(t)})", r"<<\1>>", text)
-        return text
-
-    def _rank_matched(
+    def _search_topk(
         self,
         query_text: str,
-        mode: str,
-        matched: np.ndarray,
         k: int,
-        terms: list[str] | None = None,
-        ast_override=None,
-        idfs: dict[str, float] | None = None,
-        avgdl: float | None = None,
-        prefix_expansions: dict[str, list[str]] | None = None,
-        after: tuple[float, int] | None = None,
+        mode: str,
+        qterms: list[str] | None,
+        qast,
+        after: tuple[float, int] | None,
     ) -> list[tuple[int, float]]:
-        """Exact BM25 over a pre-filtered matched set, combined base+delta
-        stats, sorted-term accumulation — the drill-down ranking contract
-        of SearchService._rank_matched on the live view. `idfs`/`avgdl`/
-        `prefix_expansions` inject a live sharded coordinator's GLOBAL
-        stats and its one global prefix rewrite."""
-        if matched.size == 0 or k <= 0:
+        # the live view has no dedicated OR evaluator: OR queries and
+        # did-you-mean term lists rank through the boolean evaluator on a
+        # flat node; plain AND takes the pruned conjunctive topk
+        s = self.searcher
+        if qterms is None:
+            if qast is not None or mode == "bool":
+                return s.topk_bool(query_text, k, ast_override=qast, after=after)
+            if mode != "or":
+                return s.topk(query_text, k, after=after)
+        ts = qterms if qterms is not None else sorted(
+            set(self._an.analyze_query(query_text))
+        )
+        if not ts:
             return []
-        s = self.searcher
-        p = s.params
-        if avgdl is None:
-            avgdl = s.avgdl
-        if terms is None:
-            terms = (
-                self._highlight_terms(
-                    query_text, mode, ast_override=ast_override,
-                    prefix_expansions=prefix_expansions,
-                )
-                if mode == "bool"
-                else self._an.analyze_query(query_text)
-            )
-        merged = s._merged_rows(sorted(set(terms)))
-        scores = np.zeros(matched.size, dtype=np.float64)
-        for t in sorted(set(terms)):
-            ent = merged.get(t)
-            if ent is None:
-                continue
-            d, tf, dl = ent
-            pos = np.searchsorted(d, matched)
-            ok = pos < d.size
-            mask = np.zeros(matched.size, dtype=bool)
-            mask[ok] = d[pos[ok]] == matched[ok]
-            sel = pos[mask]
-            idf = (
-                idfs[t] if idfs is not None
-                else p.idf(s.n_docs, int(d.size))
-            )
-            tfv = tf[sel].astype(np.float64)
-            norm = p.k1 * (
-                1.0 - p.b + p.b * (dl[sel].astype(np.float64) / avgdl)
-            )
-            scores[mask] = scores[mask] + idf * (tfv / (tfv + norm))
-        if after is not None:
-            keep = _after_mask(matched, scores, after)
-            matched, scores = matched[keep], scores[keep]
-            if matched.size == 0:
-                return []
-        if matched.size > 4 * k:
-            kth = np.partition(-scores, k - 1)[k - 1]
-            sel2 = np.flatnonzero(-scores <= kth)
-            matched, scores = matched[sel2], scores[sel2]
-        top = np.lexsort((matched, -scores))[:k]
-        return [(int(matched[i]), float(scores[i])) for i in top]
-
-    def _filtered_matched(
-        self,
-        query_text: str,
-        mode: str,
-        filter: dict[str, str],
-        terms: list[str] | None = None,
-        ast_override=None,
-        prefix_expansions: dict[str, list[str]] | None = None,
-    ) -> np.ndarray:
-        matched = self.matched_docs(
-            query_text, mode=mode, terms=terms, ast_override=ast_override,
-            prefix_expansions=prefix_expansions,
+        node = (
+            ("term", ts[0])
+            if len(ts) == 1
+            else ("or" if mode == "or" else "and", tuple(("term", t) for t in ts))
         )
-        return _facet_filter_keep(
-            self._facet_codes, self._facet_cats, matched, filter, svc=self
-        )
-
-    def search(
-        self,
-        query_text: str,
-        k: int,
-        mode: str = "and",
-        facets: list[str] | None = None,
-        highlight: bool = False,
-        filter: dict[str, str] | None = None,
-        highlight_fragments: int | None = None,
-        fuzzy: bool = False,
-        fragment_mode: str = "term",
-        offset: int = 0,
-        budget_ms: float | None = None,
-        search_after: tuple[float, int] | None = None,
-        synonyms: dict[str, list[str]] | None = None,
-        stats_fields: list[str] | None = None,
-    ) -> SearchResponse:
-        """`offset` pages exactly like SearchService.search — rank the
-        merged base+delta view to depth k+offset, slice out the page.
-        `budget_ms` caps the request wall-clock across base, promoted
-        legs, and the delta tail (MergedSearcher.deadline)."""
-        if budget_ms is not None:
-            with self.searcher.deadline(budget_ms):
-                return self.search(
-                    query_text, k, mode=mode, facets=facets,
-                    highlight=highlight, filter=filter,
-                    highlight_fragments=highlight_fragments, fuzzy=fuzzy,
-                    fragment_mode=fragment_mode, offset=offset,
-                    search_after=search_after, synonyms=synonyms,
-                    stats_fields=stats_fields,
-                )
-        if offset < 0:
-            raise ValueError(f"offset must be ≥ 0, got {offset}")
-        if search_after is not None and offset:
-            raise ValueError("offset and search_after are mutually exclusive")
-        k = k + offset  # rank depth; sliced back to the page below
-        if highlight_fragments is not None:
-            highlight = True
-        if synonyms is not None:
-            return self._search_synonym(
-                query_text, k, synonyms, facets=facets, highlight=highlight,
-                fuzzy=fuzzy, filter=filter, mode=mode,
-                highlight_fragments=highlight_fragments,
-                fragment_mode=fragment_mode, offset=offset,
-                search_after=search_after, stats_fields=stats_fields,
-            )
-        rewrites: dict[str, str] = {}
-        qterms: list[str] | None = None
-        qast = None
-        if fuzzy:
-            # did-you-mean against the COMBINED base+delta vocabulary —
-            # the same rewrite-threading discipline as SearchService
-            from discogsography_spark.query.boolquery import (
-                parse_bool_query,
-                rewrite_fuzzy_terms,
-            )
-
-            s = self.searcher
-
-            def _known(t: str) -> bool:
-                return s._merged_rows([t])[t] is not None
-
-            def _sugg(t: str) -> str | None:
-                got = s.suggest_terms(t, k=1)
-                return got[0][0] if got else None
-
-            if mode == "bool":
-                ast0 = parse_bool_query(
-                    query_text, self._an.analyze_query,
-                    tokenize=self._an.tokenize_py,
-                )
-                if ast0 is not None:
-                    qast, rewrites = rewrite_fuzzy_terms(ast0, _known, _sugg)
-            else:
-                fixed = []
-                for t in self._an.analyze_query(query_text):
-                    if _known(t):
-                        fixed.append(t)
-                        continue
-                    sg = _sugg(t)
-                    if sg is not None:
-                        rewrites[t] = sg
-                        fixed.append(sg)
-                    else:
-                        fixed.append(t)
-                if rewrites:
-                    qterms = sorted(set(fixed))
-        if filter:
-            matched = self._filtered_matched(
-                query_text, mode, filter, terms=qterms, ast_override=qast
-            )
-            results = self._rank_matched(
-                query_text, mode, matched, k, terms=qterms,
-                ast_override=qast, after=search_after,
-            )
-        else:
-            matched = self.matched_docs(
-                query_text, mode=mode, terms=qterms, ast_override=qast
-            )
-            def _flat_ast(ts: list[str], kind: str):
-                if not ts:
-                    return None
-                if len(ts) == 1:
-                    return ("term", ts[0])
-                return (kind, tuple(("term", t) for t in ts))
-
-            if qterms is not None:
-                node = _flat_ast(qterms, "or" if mode == "or" else "and")
-                results = (
-                    self.searcher.topk_bool(
-                        query_text, k, ast_override=node, after=search_after
-                    )
-                    if node is not None
-                    else []
-                )
-            elif qast is not None:
-                results = self.searcher.topk_bool(
-                    query_text, k, ast_override=qast, after=search_after
-                )
-            elif mode == "bool":
-                results = self.searcher.topk_bool(
-                    query_text, k, after=search_after
-                )
-            elif mode == "or":
-                node = _flat_ast(
-                    sorted(set(self._an.analyze_query(query_text))), "or"
-                )
-                results = (
-                    self.searcher.topk_bool(
-                        query_text, k, ast_override=node, after=search_after
-                    )
-                    if node is not None
-                    else []
-                )
-            else:
-                results = self.searcher.topk(query_text, k, after=search_after)
-        if offset:
-            results = results[offset:]
-        resp = SearchResponse(
-            results=results, total_matched=int(matched.size), rewrites=rewrites
-        )
-        if results:
-            resp.next_after = (results[-1][1], results[-1][0])
-        if facets is None and self._facet_codes:
-            facets = sorted(self._facet_codes)
-        if facets:
-            resp.facets = self.facet_counts(matched, facets)
-        if stats_fields:
-            resp.stats = self.field_stats(matched, stats_fields)
-        if highlight:
-            hterms = (
-                qterms
-                if qterms is not None
-                else self._highlight_terms(query_text, mode, ast_override=qast)
-            )
-            resp.headlines = {
-                d: self.headline(
-                    d,
-                    hterms,
-                    max_fragments=highlight_fragments,
-                    fragment_mode=fragment_mode,
-                )
-                for d, _ in results
-            }
-        return resp
+        return s.topk_bool(query_text, k, ast_override=node, after=after)

@@ -242,7 +242,7 @@ class DeltaIndexWriter:
         # union corpus, so the compacted index matches a fresh build.
         from pyspark import StorageLevel
 
-        from discogsography_spark.index.docids import assign_doc_ids
+        from discogsography_spark.index.docids import doc_ids_assigned
 
         # null-key rows can't take a rank (same contract as the builder's
         # quarantine); they are dropped here with a count in the delta stats
@@ -257,19 +257,22 @@ class DeltaIndexWriter:
             F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
         )
         store_text = bool(self.meta.stats.get("store_text"))
-        docs = (
-            assign_doc_ids(
-                clean,
-                with_tokens=True,
-                analyzer=self.meta.analyzer,
-                keep_text=store_text,
-            )
-            .withColumn("doc_id", (F.col("doc_id") + F.lit(doc_offset)).cast("long"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        agg = docs.agg(
-            F.count("*").alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("tt")
-        ).collect()[0]
+        # `docs` is this batch's own persisted copy; the aggregate below
+        # materializes it, after which nothing reads the range-sorted
+        # input doc_ids_assigned holds, so it is released right there
+        with doc_ids_assigned(
+            clean,
+            with_tokens=True,
+            analyzer=self.meta.analyzer,
+            keep_text=store_text,
+        ) as ids:
+            docs = ids.withColumn(
+                "doc_id", (F.col("doc_id") + F.lit(doc_offset)).cast("long")
+            ).persist(StorageLevel.MEMORY_AND_DISK)
+            agg = docs.agg(
+                F.count("*").alias("n"),
+                F.coalesce(F.sum("dl"), F.lit(0)).alias("tt"),
+            ).collect()[0]
         n_new, total_tokens = int(agg["n"]), int(agg["tt"])
         n_dropped = int(src.count()) - n_new
         if n_new == 0:
@@ -1717,9 +1720,8 @@ class MergedSearcher:
                 )
         from discogsography_spark.analysis import get_analyzer
         from discogsography_spark.query.boolquery import (
-            eval_docsets,
+            expand_bool_prefixes,
             parse_bool_query,
-            polarity_terms,
         )
 
         if ast_override is not None:
@@ -1731,33 +1733,15 @@ class MergedSearcher:
             )
         if ast is None or k <= 0:
             return []
-        from discogsography_spark.query.boolquery import (
-            BoolQueryError,
-            expand_prefix_nodes,
-            has_prefix_nodes,
-        )
-
-        if has_prefix_nodes(ast):
-            # expand against the COMBINED base+delta vocabulary (delta term
-            # dictionaries are sorted in memory by _SegmentReader, so each
-            # contributes a binary-searched range — same rule as the base),
-            # keeping the capped term-ASC rewrite identical to a fresh
-            # whole-corpus rebuild's; a sharded coordinator injects its
-            # one GLOBAL rewrite instead
-            if prefix_expansions is not None:
-                ast = expand_prefix_nodes(
-                    ast, lambda p: prefix_expansions.get(p, [])
-                )
-            else:
-                ast = expand_prefix_nodes(
-                    ast, lambda p: self.expand_pattern(p, 64)
-                )
-            if ast is None:
-                return []
-            if ast == ("true",):  # defensive: parser rejects vacuous forms
-                raise BoolQueryError(
-                    "prefix expansion produced a match-all query"
-                )
+        # expand against the COMBINED base+delta vocabulary (delta term
+        # dictionaries are sorted in memory by _SegmentReader, so each
+        # contributes a binary-searched range — same rule as the base),
+        # keeping the capped term-ASC rewrite identical to a fresh
+        # whole-corpus rebuild's; a sharded coordinator injects its one
+        # GLOBAL rewrite instead
+        ast = expand_bool_prefixes(ast, self.expand_pattern, prefix_expansions)
+        if ast is None:
+            return []
         return self._topk_bool_pruned(
             ast, k, idfs=idfs, avgdl=avgdl, after=after
         )
@@ -3210,12 +3194,12 @@ def compact(spark: SparkSession, index_dir: str) -> int:
             .distinct()
         )
         union_docs = union_docs.join(dead, "old_doc_id", "left_anti")
-    from discogsography_spark.index.docids import assign_doc_ids
+    from discogsography_spark.index.docids import doc_ids_assigned
 
-    new_docs = assign_doc_ids(union_docs)
-    new_docs.write.mode("overwrite").option(
-        "parquet.block.size", str(1024 * 1024)
-    ).parquet(docs_tmp)
+    with doc_ids_assigned(union_docs) as new_docs:
+        new_docs.write.mode("overwrite").option(
+            "parquet.block.size", str(1024 * 1024)
+        ).parquet(docs_tmp)
     map_df = spark.read.parquet(docs_tmp).select("old_doc_id", "doc_id")
     if tomb_paths:
         # stats must describe the ALIVE corpus the new base serves — and

@@ -180,9 +180,7 @@ def test_mlt_merged_live_alive_semantics(spark, tmp_path_factory):
     # pick an alive source; map doc ids across the two id spaces by
     # (conv_id, turn_idx)
     live_pdf = live._docs_pdf(["conv_id", "turn_idx"]).set_index("doc_id")
-    ref_pdf = ref._docs_pdf(ref._index_dir, ["conv_id", "turn_idx"]).set_index(
-        "doc_id"
-    )
+    ref_pdf = ref._docs_pdf(["conv_id", "turn_idx"]).set_index("doc_id")
     src_key = (alive.iloc[0]["conv_id"], int(alive.iloc[0]["turn_idx"]))
     live_src = next(
         int(i) for i, r in live_pdf.iterrows()

@@ -258,3 +258,54 @@ def test_merged_synonym_response_equals_fresh(spark, tmp_path_factory):
         ap = fresh.search(q, k=3, synonyms=syn, offset=3)
         bp = live.search(q, k=3, synonyms=syn, offset=3)
         assert ap.results == bp.results, q
+
+
+def _rare_token(tdf: pd.DataFrame, max_df: int) -> str:
+    """The rarest vocabulary token with 1 <= df <= max_df (ties by token):
+    a synonym member that rare keeps a group off the dense synonym path."""
+    df: dict[str, int] = {}
+    for t in tdf["text"]:
+        for tok in set(tokenize_py(t)):
+            df[tok] = df.get(tok, 0) + 1
+    return min(
+        (n, tok) for tok, n in df.items() if 1 <= n <= max_df
+    )[1]
+
+
+def _range_matched(tdf: pd.DataFrame, q: str, syn: dict, lo: int, hi: int) -> int:
+    m = _syn_matched_pdf(tdf, q, syn)
+    return int(m["turn_idx"].between(lo, hi).sum())
+
+
+def test_rare_synonym_member_with_range_filter(served, sharded_served):
+    """A group with a rare member (df·64 < id_space) takes the general
+    relations path; a numeric (lo, hi) range filter must apply there on
+    every service, giving the brute-force range-restricted total."""
+    from discogsography_spark.corpus import make_transcripts
+    from discogsography_spark.query.serving import (
+        MergedSearchService,
+        ShardedSearchService,
+    )
+
+    svc, tdf, idx = served
+    rare = _rare_token(tdf, len(tdf) // 64 - 1)
+    q, syn = f"{rare} index", {rare: ["spark"]}
+    want = _range_matched(tdf, q, syn, 0, 3)
+    assert 0 < want < len(_syn_matched_pdf(tdf, q, syn))
+    for service in (svc, MergedSearchService(idx)):
+        resp = service.search(q, k=5, synonyms=syn, filter={"turn_idx": (0, 3)})
+        assert resp.total_matched == want, type(service).__name__
+
+    full_idx, shard_dirs = sharded_served
+    stdf = make_transcripts(n_conversations=100, mean_turns=6, vocab_size=400)
+    rare = _rare_token(stdf, len(stdf) // 128 - 1)
+    q, syn = f"{rare} turn", {rare: ["spark"]}
+    want = _range_matched(stdf, q, syn, 1, 4)
+    assert want > 0
+    sharded = ShardedSearchService(shard_dirs)
+    try:
+        for service in (SearchService(full_idx), sharded):
+            resp = service.search(q, k=5, synonyms=syn, filter={"turn_idx": (1, 4)})
+            assert resp.total_matched == want, type(service).__name__
+    finally:
+        sharded.close()
